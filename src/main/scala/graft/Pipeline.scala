@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.AnalyticsDomain
 import graft.dedup.Dedup
-import graft.extract.{DocMention, DocMentionC, Mention, MentionDict, Mentions}
+import graft.extract.{DocMention, MentionDict, Mentions}
 import graft.model._
 import graft.model.Props.Props
 import graft.translate.Translate
@@ -22,7 +22,7 @@ import graft.translate.Translate
   *    would force ObjectHashAggregate's sort-based fallback — measured
   *    15x slower at 300k docs); the one struct-min winner pass in the
   *    string path is a SortAggregate by HashAggregateExec's buffer rules
-  *    (see [[nodes]]) — the scale paths aggregate ints only;
+  *    (see [[nodes]]) — the scale path aggregates ints only;
   *  - property bags are attached AFTER the shuffles, in narrow maps;
   *  - the dictionary/ontology side is broadcast, never shuffled.
   * Total exchanges per run: doc-distinct, entity-distinct, co-occurrence
@@ -40,20 +40,12 @@ final class KgPipeline(
 
   import spark.implicits._
 
-  /** Occurrence-level mentions (provenance API; tests, audits). */
-  def mentions(docs: Dataset[Doc]): Dataset[Mention] = Mentions.detect(docs, bcDict)
-
   /** Per-(doc, entity) mentions — the pipeline's working set. */
   def docMentions(docs: Dataset[Doc]): Dataset[DocMention] =
     Mentions.detectPerDoc(docs, bcDict)
 
-  /** Dictionary-coded working set (the scale path): one int rank instead of
-    * three entity strings per row — see [[DocMentionC]]. */
-  def docMentionsCompact(docs: Dataset[Doc]): Dataset[DocMentionC] =
-    Mentions.detectPerDocCompact(docs, bcDict)
-
   /** Driver-sized (rank, curie) decode table for post-aggregation broadcast
-    * joins — the dictionary-decoding edge of the compact path. */
+    * joins — the dictionary-decoding edge of the fused path. */
   @transient private lazy val rankCurie: DataFrame = {
     import spark.implicits._
     spark.createDataset(
@@ -76,33 +68,18 @@ final class KgPipeline(
     // survivors) is merged straight back by RemoveRedundantAggregates
     // (min is duplicate-insensitive, so Catalyst deletes the inner
     // distinct). Accepted: this is the reference-parity path; the scale
-    // path (nodesFromSets/nodesFromRanks) never aggregates structs over
-    // corpus-sized input - its big pass is a dictionary-bounded rank-set
-    // combiner.
+    // path (nodesFromSets) never aggregates structs over corpus-sized
+    // input - its big pass is a dictionary-bounded rank-set combiner.
     val entityThin = dm.groupBy(col("curie"))
       .agg(min(struct(col("cls"), col("surface"))).as("cs"))
       .select(col("curie"), col("cs.cls").as("cls"), col("cs.surface").as("surface"))
     nodesFrom(entityThin, Mentions.distinctDocIds(dm))
   }
 
-  /** [[nodes]] over the dictionary-coded working set: the corpus-sized
-    * distinct runs on ONE int column (map-side partial HashAggregate over
-    * 4-byte keys); the string entity triple is decoded from the broadcast
-    * dictionary only for the tiny distinct survivors. */
-  def nodesCompact(dmc: Dataset[DocMentionC]): Dataset[KgNode] =
-    nodesFromRanks(dmc.select(col("rank")), Mentions.distinctDocIdsC(dmc))
-
-  /** Shared tail of the rank-coded node paths: `ranks` is a one-int-column
-    * corpus-sized frame (possibly with duplicates), `docIds` already
-    * distinct. */
-  private def nodesFromRanks(ranks: DataFrame, docIds: Dataset[String]): Dataset[KgNode] =
-    nodesFrom(entityThinFromRanks(ranks), docIds)
-
   /** Dictionary-bounded (curie, cls, surface) winners for a one-int-column
     * `rank` frame (duplicates allowed): decode via the broadcast dictionary,
     * then the same deterministic min(cls, surface) winner per curie as the
-    * string path — shared by the rank-coded node paths and the fused
-    * triples path. */
+    * string path — shared by the fused node and triple builders. */
   private def entityThinFromRanks(ranks: DataFrame): DataFrame = {
     val bd = bcDict
     ranks.distinct()
@@ -164,49 +141,6 @@ final class KgPipeline(
     ).as[KgEdge]
   }
 
-  /** COOCCURS_WITH edges between entities sharing a doc (a < b), with doc
-    * counts. Pairs are emitted doc-locally in the extraction pass (narrow),
-    * so the only exchange is the final tiny aggregate — no self-join. */
-  def cooccurrenceEdges(docs: Dataset[Doc]): Dataset[KgEdge] =
-    coocToEdges(Mentions.cooccurrencePairs(docs, bcDict))
-
-  /** [[mentionEdges]] over the dictionary-coded working set: the curie
-    * string re-enters via a broadcast hash join on the int rank (codegen'd,
-    * scales to million-term dictionaries where a plan-literal array would
-    * not) — the corpus-sized rows stay int-keyed until this last select. */
-  def mentionEdgesCompact(dmc: Dataset[DocMentionC]): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("mentions")
-    val spec = ctxRef.specs(cls)
-    val label = spec.labelAsEdge.getOrElse(cls)
-    dmc.join(broadcast(rankCurie), Seq("rank"))
-      .select(
-        lit(null).cast("string").as("relId"),
-        col("doc_id").as("src"),
-        col("curie").as("tgt"),
-        lit(label).as("label"),
-        propsCol(("n", col("n"), "int")).as("props"),
-      ).as[KgEdge]
-  }
-
-  /** [[cooccurrenceEdgesFrom]]'s dictionary-coded twin: the pair aggregate
-    * shuffles (int, int) keys; ranks decode to curies via two broadcast
-    * joins AFTER the aggregate (output is distinct-pair-sized). */
-  def cooccurrenceEdgesFromCompact(dmc: Dataset[DocMentionC]): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("cooccurs")
-    val label = ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
-    Mentions.cooccurrencePairsFromCompact(dmc, bcDict)
-      .join(broadcast(rankCurie.select(col("rank").as("src_rank"), col("curie").as("src"))),
-        Seq("src_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("tgt_rank"), col("curie").as("tgt"))),
-        Seq("tgt_rank"))
-      .select(
-        lit(null).cast("string").as("relId"),
-        col("src"), col("tgt"),
-        lit(label).as("label"),
-        propsCol(("n_docs", col("n_docs"), "int")).as("props"),
-      ).as[KgEdge]
-  }
-
   /** Co-occurrence edges derived from the (persisted) DocMention table —
     * no second corpus scan / trie pass; see
     * [[Mentions.cooccurrencePairsFromDocMentions]] for the contiguity
@@ -260,29 +194,13 @@ final class KgPipeline(
     (ns, es, triples(ns, es))
   }
 
-  /** [[run]] on the dictionary-coded scale path: the persisted working set
-    * carries (doc_id, rank:int, n, score) — the cache, every corpus-sized
-    * aggregate, and the pair shuffle are int-keyed; strings decode from the
-    * broadcast dictionary after the big exchanges. Output is identical to
-    * [[run]] (spec-proven) — this is the path the throughput benchmark and
-    * a 100-TB deployment use. */
-  def runCompact(docs: Dataset[Doc],
-      cacheLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      : (Dataset[KgNode], Dataset[KgEdge], Dataset[Triple]) = {
-    val dmc = docMentionsCompact(docs).persist(cacheLevel)
-    val ns = nodesCompact(dmc)
-    val es = mentionEdgesCompact(dmc).union(cooccurrenceEdgesFromCompact(dmc))
-    (ns, es, triples(ns, es))
-  }
-
   // ---- fused mention-set path (the production scale path) -------------------
 
   import org.apache.spark.sql.GraftColumnBridge.{column => exprCol, expression => colExpr}
 
   /** The FUSED working set: one row per document with >= 1 mention,
     * `(doc_id, pm: array<long>)`, each element `(rank << 32) | n` — built by
-    * the codegen'd [[graft.functions.ExtractMentions]] walking span bytes in
+    * the codegen'd [[graft.functions.ExtractMentionsKT]] walking span bytes in
     * place (no Doc/Span/String materialization, no encoder round trip).
     * Versus the row-per-mention working set this pays the doc_id string once
     * per DOCUMENT (~4x less cache traffic at ~14 mentions/doc), doc ids are
@@ -291,8 +209,7 @@ final class KgPipeline(
   def mentionSets(docs: Dataset[Doc]): DataFrame = {
     // kind/text as parallel GetArrayStructFields extractions: nested schema
     // pruning narrows the parquet ReadSchema to spans.{kind,text} — the
-    // scan never decodes media_ref/offset (the whole-struct ExtractMentions
-    // form read all four nested columns)
+    // scan never decodes media_ref/offset
     val extract = exprCol(graft.functions.ExtractMentionsKT(
       colExpr(col("spans.kind")), colExpr(col("spans.text")), bcDict))
     // explode(array(e)) is a pushdown barrier, not a transformation: a bare
@@ -312,13 +229,14 @@ final class KgPipeline(
     * corpus mention stream, no per-mention hash probe); doc ids are
     * one-per-row already. */
   def nodesFromSets(ms: DataFrame): Dataset[KgNode] =
-    nodesFromRanks(
-      graft.extract.CoocCombine.partialRankSets(
-        ms.select(col("pm")).as[Array[Long]], bcDict).toDF("rank"),
+    nodesFrom(
+      entityThinFromRanks(graft.extract.CoocCombine.partialRankSets(
+        ms.select(col("pm")).as[Array[Long]], bcDict).toDF("rank")),
       ms.select(col("doc_id")).as[String])
 
-  /** [[mentionEdgesCompact]] over the mention-set table: explode + decode
-    * join, all codegen. */
+  /** [[mentionEdges]] over the mention-set table: explode + broadcast rank
+    * decode join, all codegen — the corpus-sized rows stay int-keyed until
+    * this last select. */
   def mentionEdgesFromSets(ms: DataFrame): Dataset[KgEdge] = {
     val cls = ctxRef.inputLabelToClass("mentions")
     val spec = ctxRef.specs(cls)
@@ -337,16 +255,17 @@ final class KgPipeline(
       ).as[KgEdge]
   }
 
-  /** Co-occurrence edges over the mention-set table: per-doc pair emission
-    * and the partial count run in ONE primitive per-partition combiner
-    * ([[graft.extract.CoocCombine]] — open-addressing long→long map over
-    * packed pairs, spill-safe, no object churn, no contiguity contract);
-    * the only exchange carries dictionary-bounded (pair, partial) rows,
-    * summed in one small final aggregate. */
-  def cooccurrenceEdgesFromSets(ms: DataFrame,
-      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[KgEdge] = {
-    val cls = ctxRef.inputLabelToClass("cooccurs")
-    val label = ctxRef.specs(cls).labelAsEdge.getOrElse(cls)
+  /** Co-occurring entity pairs `(src, tgt, n_docs)` over the mention-set
+    * table: per-doc pair emission and the partial count run in ONE
+    * primitive per-partition combiner ([[graft.extract.CoocCombine]] —
+    * open-addressing long→long map over packed pairs, spill-safe, no object
+    * churn, no contiguity contract); the only exchange carries
+    * dictionary-bounded (pair, partial) rows, summed in one small final
+    * aggregate, and ranks decode to curies via two broadcast joins after
+    * it. Same rows as [[Mentions.cooccurrencePairsFromDocMentions]] on the
+    * string path. */
+  def cooccurrencePairsFromSets(ms: DataFrame,
+      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): DataFrame =
     graft.extract.CoocCombine.partialPairCounts(
         ms.select(col("pm")).as[Array[Long]], bcDict, maxEntitiesPerDoc)
       .toDF("pair", "cnt")
@@ -355,17 +274,22 @@ final class KgPipeline(
         shiftright(col("pair"), 32).cast("int").as("src_rank"),
         col("pair").bitwiseAND(lit(0xffffffffL)).cast("int").as("tgt_rank"),
         col("n_docs"))
+      .transform(decodePair)
+      .select(col("src"), col("tgt"), col("n_docs"))
+
+  /** Adds the `src`/`tgt` curies of a `(src_rank, tgt_rank)` pair frame via
+    * two broadcast decode joins. */
+  private def decodePair(pairs: DataFrame): DataFrame =
+    pairs
       .join(broadcast(rankCurie.select(col("rank").as("src_rank"), col("curie").as("src"))),
         Seq("src_rank"))
       .join(broadcast(rankCurie.select(col("rank").as("tgt_rank"), col("curie").as("tgt"))),
         Seq("tgt_rank"))
-      .select(
-        lit(null).cast("string").as("relId"),
-        col("src"), col("tgt"),
-        lit(label).as("label"),
-        propsCol(("n_docs", col("n_docs"), "int")).as("props"),
-      ).as[KgEdge]
-  }
+
+  /** COOCCURS_WITH edges over the mention-set table. */
+  def cooccurrenceEdgesFromSets(ms: DataFrame,
+      maxEntitiesPerDoc: Int = Mentions.DefaultMaxEntitiesPerDoc): Dataset[KgEdge] =
+    coocToEdges(cooccurrencePairsFromSets(ms, maxEntitiesPerDoc))
 
   /** [[triples]] built STRAIGHT from the packed mention-set cache — no
     * KgNode/KgEdge row building, no property bags, no count aggregation (a
@@ -448,17 +372,14 @@ final class KgPipeline(
     val coocLabel = ctxRef.specs(coocCls).labelAsEdge.getOrElse(coocCls)
     val coocTriples = keys.filter(hi =!= lo)
       .select(hi.as("src_rank"), lo.as("tgt_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("src_rank"), col("curie").as("src"))),
-        Seq("src_rank"))
-      .join(broadcast(rankCurie.select(col("rank").as("tgt_rank"), col("curie").as("tgt"))),
-        Seq("tgt_rank"))
+      .transform(decodePair)
       .select(col("src").as("subj"), lit(coocLabel).as("pred"), col("tgt").as("obj"))
     entityType.union(docType).union(mentionTriples).union(coocTriples).as[Triple]
   }
 
   /** [[run]] on the fused mention-set path — the path the throughput
-    * benchmark and a 100-TB deployment use. Output identical to [[run]] and
-    * [[runCompact]] (spec-proven). The triple table is built by
+    * benchmark and a 100-TB deployment use. Output identical to [[run]]
+    * (spec-proven). The triple table is built by
     * [[triplesFromSets]] (same rows as `triples(ns, es)`, shared-scan
     * plan); `ns`/`es` stay lazy, so a triples-only consumer never pays the
     * entity-row builds. */

@@ -367,7 +367,7 @@ object SparkEntry {
     }),
     "kg_cooccurrence" -> ((s, dir) => {
       val pipe = KgPipeline.analytics(s)
-      graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
     }),
     "kg_degree_hist" -> ((s, dir) => {
       // graph-shape QA over the production fused triple path: out-degree
@@ -383,7 +383,7 @@ object SparkEntry {
       // fixed-point power iterations; the rank table is dictionary-bounded
       // so every iteration is a broadcast join — zero shuffled joins
       val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      val pairs = pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
       graft.ops.GraphOps.pageRank(pairs)
     }),
     "kg_ppr" -> ((s, dir) => {
@@ -391,7 +391,7 @@ object SparkEntry {
       // teleport mass confined to the seed set; same integral broadcast
       // schedule as kg_pagerank (|S| replaces N in the unit)
       val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      val pairs = pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
       graft.ops.GraphOps.pageRank(pairs, seeds = Seq("engine:spark"))
     }),
     "kg_neighbors_topk" -> ((s, dir) => {
@@ -399,7 +399,7 @@ object SparkEntry {
       // deterministic tie-break on the neighbor id; one bounded-partition
       // window over the tiny pair aggregate
       val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      val pairs = pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
       graft.ops.GraphOps.topNeighbors(pairs, k = 3)
     }),
     "kg_triangles" -> ((s, dir) => {
@@ -407,7 +407,7 @@ object SparkEntry {
       // fixed-point neighborhood Jaccard; the wedge join runs on the tiny
       // pair aggregate (dict-bounded -> both joins broadcast)
       val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      val pairs = pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
       graft.ops.GraphOps.triangleSupport(pairs)
     }),
     "kg_pmi_edges" -> ((s, dir) => {
@@ -429,7 +429,7 @@ object SparkEntry {
       // rounds as dedup_clusters: ONE implementation for component
       // finding whether vertices are documents or KG entities.
       val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      val pairs = pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
       val top1 = graft.ops.GraphOps.topNeighbors(pairs, k = 1)
       graft.ops.GraphOps.components(top1, srcCol = "node", tgtCol = "neighbor")
     }),
@@ -438,7 +438,7 @@ object SparkEntry {
       // entity over the SAME top-1-strongest-neighbor graph kg_components
       // labels — frontier BFS, each round a broadcast join + anti-join
       val pipe = KgPipeline.analytics(s)
-      val pairs = graft.extract.Mentions.cooccurrencePairs(kgDocs(s, dir), pipe.bcDict)
+      val pairs = pipe.cooccurrencePairsFromSets(pipe.mentionSets(kgDocs(s, dir)))
       val top1 = graft.ops.GraphOps.topNeighbors(pairs, k = 1)
       graft.ops.GraphOps.egoSubgraph(top1, seed = "engine:spark", hops = 3,
         srcCol = "node", tgtCol = "neighbor")

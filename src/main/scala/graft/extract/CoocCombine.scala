@@ -21,7 +21,7 @@ import org.apache.spark.sql.Dataset
   */
 object CoocCombine {
 
-  /** Per-doc capped+sorted rank selection shared with the expression path:
+  /** Per-doc capped+sorted rank selection shared by every combiner below:
     * ranks ascending; docs over `maxEntities` keep the top entities by
     * (score desc, rank asc), score = scoreUnit(rank) * n. */
   private[graft] def cappedSortedRanks(pm: Array[Long], su: Array[Double],
@@ -48,7 +48,7 @@ object CoocCombine {
   }
 
   /** partialPairCounts is a public API whose input contract (one pm entry
-    * per DISTINCT entity rank, as ExtractMentions emits) is enforced here:
+    * per DISTINCT entity rank, as ExtractMentionsKT emits) is enforced here:
     * a duplicate rank would otherwise emit a semantically meaningless
     * self-pair (ADVICE r5). Free in the common branch (already sorted). */
   private def assertDistinct(ranks: Array[Int], sorted: Boolean): Unit = {
@@ -58,7 +58,7 @@ object CoocCombine {
       if (ranks(i) == ranks(i - 1))
         throw new IllegalArgumentException(
           s"duplicate entity rank ${ranks(i)} in a packed mention row — pm rows " +
-            "must carry one entry per distinct entity (ExtractMentions contract)")
+            "must carry one entry per distinct entity (ExtractMentionsKT contract)")
       i += 1
     }
   }

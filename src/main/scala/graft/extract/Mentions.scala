@@ -1,7 +1,7 @@
 package graft.extract
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.model.Props.Props
@@ -29,7 +29,7 @@ final class MentionDict private (
   @transient lazy val byRank: Array[DictEntry] =
     linkFor.indices.sortBy(i => linkFor(i).curie).map(linkFor).toArray
   /** rank -> per-occurrence score unit (prior x surface length): a mention's
-    * score is `scoreUnitByRank(rank) * n`, so the cached compact row need
+    * score is `scoreUnitByRank(rank) * n`, so the packed mention set need
     * not carry it — executor-side consumers rederive it from the broadcast
     * dictionary instead of paying 8 bytes/row of cache bandwidth. */
   @transient lazy val scoreUnitByRank: Array[Double] =
@@ -73,23 +73,6 @@ final case class DocMention(
     score: Double,
 )
 
-/** Dictionary-coded per-document mention: the entity is the pattern's
-  * curie-lexicographic RANK (see [[MentionDict.rankOf]]), not its strings.
-  * This is the SCALE-PATH working row: the corpus-sized cache, shuffles and
-  * aggregations carry one int instead of three strings (curie/cls/surface),
-  * and rank order == curie order, so every downstream sort/pair semantics is
-  * preserved exactly. Strings re-enter via a broadcast rank join (or the
-  * driver-sized [[MentionDict.byRank]] table) AFTER the big aggregations —
-  * dictionary encoding end-to-end, decoded at the edges. The mention score
-  * is NOT carried: it is `scoreUnitByRank(rank) * n`, rederived from the
-  * broadcast dictionary by the one consumer that needs it (the co-occurrence
-  * cap tie-break) instead of widening every cached row by 8 bytes. */
-final case class DocMentionC(
-    doc_id: String,
-    rank: Int,
-    n: Long,
-)
-
 /** Mention detection + entity linking over interleaved text+media documents
   * — the web-scale "adapter" stage (BASELINE.json north rule; replaces the
   * reference's user-generator source, biocypher/_core.py:421-461).
@@ -110,11 +93,11 @@ object Mentions {
   val DefaultMaxEntitiesPerDoc = 256
 
   /** Per-doc occurrence counts saturate at 2³¹-1: the fused packed-long path
-    * ([[graft.functions.ExtractMentions]]) has only 32 bits for the count
-    * half of its `(rank << 32) | n` encoding, so the string and compact
-    * paths clamp at the same bound — all three pipeline paths agree by
-    * construction (ADVICE r5), and a single doc would need >2 G occurrences
-    * of one entity to ever reach it. */
+    * ([[graft.functions.ExtractMentionsKT]]) has only 32 bits for the count
+    * half of its `(rank << 32) | n` encoding, so the string path clamps at
+    * the same bound — both pipeline paths agree by construction (ADVICE
+    * r5), and a single doc would need >2 G occurrences of one entity to
+    * ever reach it. */
   val MaxOccurrencesPerDoc: Long = 0x7fffffffL
 
   @inline private def clampN(n: Long): Long =
@@ -194,7 +177,8 @@ object Mentions {
   /** Occurrence mentions aggregated per document inside the same narrow
     * pass (a per-doc hash map in the flatMap — no shuffle): one row per
     * (doc, entity) with occurrence count and summed score. This is the
-    * scale-path entry: downstream dedups operate on these thin rows. */
+    * reference path's working set: downstream dedups operate on these thin
+    * rows. */
   def detectPerDoc(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[DocMention] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[DocMention]
     docs.mapPartitions { it =>
@@ -225,85 +209,6 @@ object Mentions {
     }
   }
 
-  /** [[detectPerDoc]]'s dictionary-coded twin: one (doc_id, rank, n) row
-    * per (doc, entity). Same trie pass, same per-doc aggregation — the
-    * emission carries the pattern's curie-lex rank instead of the three
-    * entity strings. See [[DocMentionC]] for why this is the row the
-    * 100-TB path caches and shuffles. */
-  def detectPerDocCompact(docs: Dataset[Doc], bcDict: Broadcast[MentionDict]): Dataset[DocMentionC] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[DocMentionC]
-    docs.mapPartitions { it =>
-      val dict = bcDict.value
-      val counts = new Array[Long](dict.linkFor.length)
-      val touched = new Array[Int](dict.linkFor.length)
-      it.flatMap { doc =>
-        var nTouched = 0
-        doc.spans.foreach { span =>
-          if (span.kind == "text" && span.text != null)
-            nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
-        }
-        val out = new Array[DocMentionC](nTouched)
-        var i = 0
-        while (i < nTouched) {
-          val pi = touched(i)
-          out(i) = DocMentionC(doc.doc_id, dict.rankOf(pi), clampN(counts(pi)))
-          counts(pi) = 0
-          i += 1
-        }
-        out
-      }
-    }
-  }
-
-  /** Co-occurring entity pairs emitted per document in the same narrow
-    * pass (doc-local entity set -> ordered pairs), then one tiny aggregate:
-    * (src, tgt, n_docs). Replaces a 2x-sort self-join of the mention table
-    * — at 1.5M docs the join took minutes, this takes seconds, and the
-    * shuffle is O(distinct pairs), not O(docs x pairs). */
-  def cooccurrencePairs(docs: Dataset[Doc], bcDict: Broadcast[MentionDict],
-      maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val droppedDocs = spark.sparkContext.longAccumulator("cooccurrence_capped_docs")
-    val droppedEntities = spark.sparkContext.longAccumulator("cooccurrence_dropped_entities")
-    val pairs = docs.mapPartitions { it =>
-      val dict = bcDict.value
-      val counts = new Array[Long](dict.linkFor.length)
-      val touched = new Array[Int](dict.linkFor.length)
-      it.flatMap { doc =>
-        // distinct entity RANKS per doc (curie lexicographic order preserved
-        // via integer ranks — keeps a < b semantics without string sorting)
-        var nTouched = 0
-        doc.spans.foreach { span =>
-          if (span.kind == "text" && span.text != null)
-            nTouched = dict.trie.countWholeWords(span.text, counts, touched, nTouched)
-        }
-        var arr = new Array[Int](nTouched)
-        val scores = new Array[Double](nTouched)
-        var i = 0
-        while (i < nTouched) {
-          val pi = touched(i)
-          arr(i) = dict.rankOf(pi)
-          val e = dict.linkFor(pi)
-          scores(i) = e.prior * e.surface.length * clampN(counts(pi))
-          counts(pi) = 0
-          i += 1
-        }
-        // pair-emission cap: an open-dictionary entity-list page would emit
-        // O(n²) pairs; keep the top-scored entities (deterministic
-        // tie-break by rank) and count the drop
-        if (nTouched > maxEntitiesPerDoc) {
-          droppedDocs.add(1)
-          droppedEntities.add(nTouched - maxEntitiesPerDoc)
-          arr = topRanksByScore(arr, scores, maxEntitiesPerDoc)
-        } else java.util.Arrays.sort(arr)
-        for { a <- arr.indices.iterator; b <- (a + 1) until arr.length }
-          yield (dict.byRank(arr(a)).curie, dict.byRank(arr(b)).curie)
-      }
-    }.toDF("src", "tgt")
-    pairs.groupBy(col("src"), col("tgt")).agg(count(lit(1)).as("n_docs"))
-  }
-
   /** Co-occurring entity pairs derived from an UNSHUFFLED DocMention
     * dataset (straight from [[detectPerDoc]], possibly persisted): rows of
     * one doc are contiguous within a partition by construction, so per-doc
@@ -316,9 +221,10 @@ object Mentions {
     * hash of every doc-run it has closed (8 B per run) and raises if a
     * doc_id reappears after its run ended — a re-shuffled input fails
     * loudly instead of silently emitting wrong pairs. Within a doc the
-    * curies are already distinct; lexicographic sort reproduces the a < b
-    * pair order of [[cooccurrencePairs]] exactly, and the same
-    * `maxEntitiesPerDoc` cap applies (top score, curie tie-break). */
+    * curies are already distinct; lexicographic sort reproduces the fused
+    * path's rank-ordered a < b pairs exactly (rank order == curie order),
+    * and the same `maxEntitiesPerDoc` cap applies (top score, curie
+    * tie-break). */
   def cooccurrencePairsFromDocMentions(dm: Dataset[DocMention],
       maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc,
       guard: Boolean = true): DataFrame = {
@@ -380,95 +286,15 @@ object Mentions {
     pairs.groupBy(col("src"), col("tgt")).agg(count(lit(1)).as("n_docs"))
   }
 
-  /** [[cooccurrencePairsFromDocMentions]]'s dictionary-coded twin over
-    * [[DocMentionC]]: pair rows are (src_rank, tgt_rank) INTS — rank order
-    * == curie order, so `src_rank < tgt_rank` reproduces the `a < b` curie
-    * pair semantics (and the score/rank cap tie-break) exactly, while the
-    * only corpus-sized exchange carries 8 bytes per pair instead of two
-    * strings. Columns: (src_rank, tgt_rank, n_docs); decode ranks AFTER
-    * this aggregate. Same doc-run contiguity contract and runtime guard. */
-  def cooccurrencePairsFromCompact(dmc: Dataset[DocMentionC],
-      bcDict: Broadcast[MentionDict],
-      maxEntitiesPerDoc: Int = DefaultMaxEntitiesPerDoc,
-      guard: Boolean = true): DataFrame = {
-    val spark = dmc.sparkSession
-    import spark.implicits._
-    val droppedDocs = spark.sparkContext.longAccumulator("cooccurrence_capped_docs")
-    // pairs are PACKED into one long (srcRank << 32 | tgtRank): the only
-    // corpus-sized exchange shuffles a single 8-byte key (16 B/row unsafe
-    // format vs 24 B for two int columns) and aggregates on one primitive
-    val packed = dmc.mapPartitions { it =>
-      // cap tie-break scores rederive from the broadcast dictionary
-      // (score = scoreUnit(rank) * n) — the cached row doesn't carry them
-      val su = bcDict.value.scoreUnitByRank
-      val base = it.buffered
-      val seenRuns = if (guard) new LongHashSet(1 << 16) else null
-      var ranks = new Array[Int](256)
-      var scores = new Array[Double](256)
-      new Iterator[Long] {
-        private var out: Iterator[Long] = Iterator.empty
-        private def advance(): Unit = {
-          while (!out.hasNext && base.hasNext) {
-            val docId = base.head.doc_id
-            if (guard && !seenRuns.add(docHash(docId)))
-              throw new IllegalStateException(
-                s"doc-run contiguity violated: doc_id $docId reappeared after its run " +
-                  "ended — the DocMentionC dataset was shuffled between detectPerDocCompact " +
-                  "and pair emission (pass guard=false only if contiguity is certain)")
-            var n = 0
-            while (base.hasNext && base.head.doc_id == docId) {
-              if (n == ranks.length) {
-                ranks = java.util.Arrays.copyOf(ranks, n * 2)
-                scores = java.util.Arrays.copyOf(scores, n * 2)
-              }
-              val m = base.next()
-              ranks(n) = m.rank; scores(n) = su(m.rank) * m.n; n += 1
-            }
-            if (n >= 2) {
-              val arr: Array[Int] =
-                if (n > maxEntitiesPerDoc) {
-                  droppedDocs.add(1)
-                  topRanksByScore(java.util.Arrays.copyOf(ranks, n),
-                    java.util.Arrays.copyOf(scores, n), maxEntitiesPerDoc)
-                } else {
-                  val a = java.util.Arrays.copyOf(ranks, n)
-                  java.util.Arrays.sort(a)
-                  a
-                }
-              out = for {
-                a <- arr.indices.iterator
-                b <- ((a + 1) until arr.length).iterator
-              } yield (arr(a).toLong << 32) | arr(b).toLong
-            }
-          }
-        }
-        def hasNext: Boolean = { advance(); out.hasNext }
-        def next(): Long = { advance(); out.next() }
-      }
-    }(org.apache.spark.sql.Encoders.scalaLong).toDF("pair")
-    packed.groupBy(col("pair")).agg(count(lit(1)).as("n_docs"))
-      .select(
-        shiftright(col("pair"), 32).cast("int").as("src_rank"),
-        col("pair").bitwiseAND(lit(0xffffffffL)).cast("int").as("tgt_rank"),
-        col("n_docs"))
-  }
-
   /** Distinct doc ids from an UNSHUFFLED DocMention dataset (same
     * contiguity contract — and runtime guard — as
     * [[cooccurrencePairsFromDocMentions]]): each doc is one contiguous run
     * in exactly one partition, so emitting one id per run IS the global
     * distinct — no 10⁶-key shuffle. */
-  def distinctDocIds(dm: Dataset[DocMention], guard: Boolean = true): Dataset[String] =
-    distinctRunIds(dm.sparkSession, dm.map(_.doc_id)(org.apache.spark.sql.Encoders.STRING), guard)
-
-  /** [[distinctDocIds]] over the dictionary-coded rows — same contract. */
-  def distinctDocIdsC(dmc: Dataset[DocMentionC], guard: Boolean = true): Dataset[String] =
-    distinctRunIds(dmc.sparkSession, dmc.map(_.doc_id)(org.apache.spark.sql.Encoders.STRING), guard)
-
-  private def distinctRunIds(spark: SparkSession, ids: Dataset[String],
-      guard: Boolean): Dataset[String] = {
+  def distinctDocIds(dm: Dataset[DocMention], guard: Boolean = true): Dataset[String] = {
+    val spark = dm.sparkSession
     import spark.implicits._
-    ids.mapPartitions { it =>
+    dm.map(_.doc_id).mapPartitions { it =>
       val seenRuns = if (guard) new LongHashSet(1 << 16) else null
       var last: String = null
       it.flatMap { id =>
@@ -498,15 +324,6 @@ object Mentions {
     }
   }
 
-  /** Entity nodes from text mentions: canonical id = CURIE; the surface and
-    * detection stats become properties downstream of dedup. */
-  def toRawNodes(mentions: Dataset[Mention]): Dataset[RawNode] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RawNode]
-    mentions.filter(_.cls != "media").map { m =>
-      RawNode(m.curie, m.cls, Props.of("name" -> PV.str(m.surface)))
-    }
-  }
-
   /** Document->entity mention edges. */
   def toMentionEdges(mentions: Dataset[Mention], inputLabel: String = "mentions"): Dataset[RawEdge] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[RawEdge]
@@ -515,29 +332,17 @@ object Mentions {
     }
   }
 
-  /** Distinct co-occurring entity pairs per doc (a < b), with pair counts —
-    * pure Catalyst (exploded self-join per doc on the deduped per-doc entity
-    * list, no UDF). */
-  def cooccurrence(mentions: Dataset[Mention]): DataFrame = {
-    val perDoc = mentions.filter(col("cls") =!= "media")
-      .select(col("doc_id"), col("curie")).distinct()
-    val a = perDoc.as("a"); val b = perDoc.as("b")
-    a.join(b, col("a.doc_id") === col("b.doc_id") && col("a.curie") < col("b.curie"))
-      .groupBy(col("a.curie").as("src"), col("b.curie").as("tgt"))
-      .agg(count(lit(1)).as("n_docs"))
-  }
-
   /** Span-sequence signature per doc: md5 over the ordered
     * (kind, text, media_ref, offset) tuples — the per-row invariant column
     * (BASELINE.json input_hint). Pure Catalyst expression. */
   def spanSignature(spansCol: Column): Column = {
     val rendered = transform(spansCol, s =>
-      concat_ws("",
-        coalesce(s.getField("kind"), lit(" ")),
-        coalesce(s.getField("text"), lit(" ")),
-        coalesce(s.getField("media_ref"), lit(" ")),
+      concat_ws("\u0001",
+        coalesce(s.getField("kind"), lit("\u0000")),
+        coalesce(s.getField("text"), lit("\u0000")),
+        coalesce(s.getField("media_ref"), lit("\u0000")),
         s.getField("offset").cast("string")))
-    md5(to_binary(array_join(rendered, ""), lit("utf-8")))
+    md5(to_binary(array_join(rendered, "\u0002"), lit("utf-8")))
   }
 
   /** Assert the invariant holds between two doc tables (same doc_ids, same

@@ -1,18 +1,18 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.extract.{MentionDict, Mentions}
 
-/** Codegen'd mention extraction over a `spans` column: for each document row
-  * returns the PACKED MENTION SET `array<long>` with one element
-  * `(rank << 32) | n` per distinct matched entity (curie-lex rank, per-doc
-  * occurrence count, first-touch order).
+/** Codegen'd mention extraction over two PARALLEL arrays `spans.kind` /
+  * `spans.text`: for each document row returns the PACKED MENTION SET
+  * `array<long>` with one element `(rank << 32) | n` per distinct matched
+  * entity (curie-lex rank, per-doc occurrence count, first-touch order).
   *
   * This is the zero-allocation scale path for the adapter stage: the
   * Aho-Corasick walk runs directly over the span text's UTF8 bytes inside
@@ -22,52 +22,24 @@ import graft.extract.{MentionDict, Mentions}
   * Non-ASCII spans (or a non-ASCII dictionary) fall back to the String walk
   * for exact parity with [[Mentions.detectPerDoc]] — spec-asserted.
   *
+  * Each input is a plain `GetArrayStructFields` extraction, so Catalyst's
+  * nested schema pruning narrows the parquet ReadSchema to exactly those
+  * two nested fields — the scan never decodes `media_ref`/`offset`. A null
+  * struct element yields null entries in both arrays and is skipped.
+  *
   * One output ROW PER DOCUMENT (pre-explode): doc boundaries are row
-  * boundaries, so downstream per-doc logic ([[CoocPackedPairs]]) needs no
-  * run-contiguity contract, and the cached working set pays the doc_id
-  * string once per document instead of once per mention.
+  * boundaries, so downstream per-doc logic ([[graft.extract.CoocCombine]])
+  * needs no run-contiguity contract, and the cached working set pays the
+  * doc_id string once per document instead of once per mention.
   */
-case class ExtractMentions(child: Expression, bcDict: Broadcast[MentionDict])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  @transient private lazy val helper: MentionExtractor = {
-    val st = child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-    new MentionExtractor(bcDict, st.fieldIndex("kind"), st.fieldIndex("text"), st.size)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    helper.extract(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val h = ctx.addReferenceObj("mentionExtractor", helper,
-        classOf[MentionExtractor].getName)
-      s"${ev.value} = $h.extract($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ExtractMentions =
-    copy(child = newChild)
-}
-
-/** [[ExtractMentions]] over two PARALLEL arrays `spans.kind` / `spans.text`
-  * (each a plain `GetArrayStructFields` extraction): Catalyst's nested
-  * schema pruning then narrows the parquet ReadSchema to exactly those two
-  * nested fields — the scan never decodes `media_ref`/`offset`, which the
-  * whole-struct form forced it to read. Semantics identical to
-  * [[ExtractMentions]] (spec-asserted): a null struct element yields null
-  * entries in both arrays and is skipped either way. */
 case class ExtractMentionsKT(kinds: Expression, texts: Expression,
-    bcDict: Broadcast[MentionDict])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    bcDict: Broadcast[MentionDict]) extends BinaryExpression {
 
   override def left: Expression = kinds
   override def right: Expression = texts
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  @transient private lazy val helper: MentionExtractor =
-    new MentionExtractor(bcDict, -1, -1, -1) // struct indices unused on this path
+  @transient private lazy val helper: MentionExtractor = new MentionExtractor(bcDict)
 
   override protected def nullSafeEval(k: Any, t: Any): Any =
     helper.extractKT(k.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
@@ -84,11 +56,10 @@ case class ExtractMentionsKT(kinds: Expression, texts: Expression,
     copy(kinds = newLeft, texts = newRight)
 }
 
-/** The executor-side worker behind [[ExtractMentions]] (shipped inside the
-  * codegen references array; one instance per plan, thread-safe via
+/** The executor-side worker behind [[ExtractMentionsKT]] (shipped inside
+  * the codegen references array; one instance per plan, thread-safe via
   * per-thread scratch buffers sized to the dictionary). */
-final class MentionExtractor(bcDict: Broadcast[MentionDict],
-    kindIdx: Int, textIdx: Int, numFields: Int) extends Serializable {
+final class MentionExtractor(bcDict: Broadcast[MentionDict]) extends Serializable {
 
   @transient private lazy val TEXT = UTF8String.fromString("text")
 
@@ -100,51 +71,11 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
     override def initialValue(): Scratch = new Scratch
   }
 
-  def extract(spans: ArrayData): ArrayData = {
-    val dict = bcDict.value
-    val sc = scratch.get()
-    val counts = sc.counts
-    val touched = sc.touched
-    var nTouched = 0
-    val nSpans = spans.numElements()
-    var si = 0
-    while (si < nSpans) {
-      if (!spans.isNullAt(si)) {
-        val row = spans.getStruct(si, numFields)
-        if (!row.isNullAt(kindIdx) && !row.isNullAt(textIdx) &&
-            row.getUTF8String(kindIdx).equals(TEXT)) {
-          val t = row.getUTF8String(textIdx)
-          nTouched =
-            if (dict.trie.isAsciiDense && isAscii(t))
-              dict.trie.countWholeWordsAscii(t.getBaseObject, t.getBaseOffset,
-                t.numBytes, counts, touched, nTouched)
-            else // exact parity on non-ASCII text / dictionaries
-              dict.trie.countWholeWords(t.toString, counts, touched, nTouched)
-        }
-      }
-      si += 1
-    }
-    val out = new Array[Long](nTouched)
-    var i = 0
-    while (i < nTouched) {
-      val pi = touched(i)
-      val n = counts(pi)
-      // saturate at Mentions.MaxOccurrencesPerDoc — the 32-bit count half of
-      // the packed long; the string/compact paths clamp identically
-      out(i) = (dict.rankOf(pi).toLong << 32) |
-        (if (n > graft.extract.Mentions.MaxOccurrencesPerDoc)
-           graft.extract.Mentions.MaxOccurrencesPerDoc else n)
-      counts(pi) = 0
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** [[extract]] over pre-extracted parallel `spans.kind` / `spans.text`
-    * arrays (see [[ExtractMentionsKT]]): same trie walk, same packing, same
-    * clamp — only the span-struct access pattern differs (a null struct
-    * element surfaces as null entries in BOTH arrays, so the null checks
-    * subsume the original element-null check). */
+  /** One document's packed mention set from its parallel `spans.kind` /
+    * `spans.text` arrays (a null struct element surfaces as null entries in
+    * BOTH arrays, so the per-entry null checks skip it). Counts saturate at
+    * [[Mentions.MaxOccurrencesPerDoc]], the 32-bit count half of the packed
+    * long; the string path clamps identically. */
   def extractKT(kinds: ArrayData, texts: ArrayData): ArrayData = {
     val dict = bcDict.value
     val sc = scratch.get()
@@ -172,8 +103,7 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
       val pi = touched(i)
       val c = counts(pi)
       out(i) = (dict.rankOf(pi).toLong << 32) |
-        (if (c > graft.extract.Mentions.MaxOccurrencesPerDoc)
-           graft.extract.Mentions.MaxOccurrencesPerDoc else c)
+        (if (c > Mentions.MaxOccurrencesPerDoc) Mentions.MaxOccurrencesPerDoc else c)
       counts(pi) = 0
       i += 1
     }
@@ -195,64 +125,5 @@ final class MentionExtractor(bcDict: Broadcast[MentionDict],
       i += 1
     }
     true
-  }
-}
-
-/** Codegen'd per-document co-occurrence pair emission over a packed mention
-  * set (the [[ExtractMentions]] output): returns `array<long>` of packed
-  * `(srcRank << 32) | tgtRank` pairs with `srcRank < tgtRank` — rank order
-  * == curie order, so this reproduces the string pipeline's `a < b` curie
-  * pair semantics exactly. Docs above `maxEntities` keep their top entities
-  * by (score desc, rank asc), score rederived from the broadcast dictionary
-  * as `scoreUnit(rank) * n` — identical cap semantics to
-  * [[Mentions.cooccurrencePairsFromCompact]].
-  *
-  * Because the input row IS the document, there is no run-walking and no
-  * contiguity contract: this works on any (even shuffled) mention-set table.
-  * Capped-doc accounting: `filter(size(pm) > cap).count` on the input.
-  */
-case class CoocPackedPairs(child: Expression, bcDict: Broadcast[MentionDict],
-    maxEntities: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  @transient private lazy val helper = new CoocPairsWorker(bcDict, maxEntities)
-
-  override protected def nullSafeEval(input: Any): Any =
-    helper.pairs(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val h = ctx.addReferenceObj("coocPairsWorker", helper,
-        classOf[CoocPairsWorker].getName)
-      s"${ev.value} = $h.pairs($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CoocPackedPairs =
-    copy(child = newChild)
-}
-
-final class CoocPairsWorker(bcDict: Broadcast[MentionDict], maxEntities: Int)
-    extends Serializable {
-
-  private val empty = Array.emptyLongArray
-
-  def pairs(pm: ArrayData): ArrayData = {
-    val n = pm.numElements()
-    if (n < 2) return UnsafeArrayData.fromPrimitiveArray(empty)
-    // shared per-doc cap + sort semantics with the combiner path
-    val arr = graft.extract.CoocCombine.cappedSortedRanks(
-      pm.toLongArray(), bcDict.value.scoreUnitByRank, maxEntities)
-    val m = arr.length
-    val out = new Array[Long](m * (m - 1) / 2)
-    var k = 0
-    var a = 0
-    while (a < m) {
-      val hi = arr(a).toLong << 32
-      var b = a + 1
-      while (b < m) { out(k) = hi | arr(b).toLong; k += 1; b += 1 }
-      a += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }

@@ -64,7 +64,7 @@ object ResolveOps {
       // levenshtein evaluated ONCE per candidate: the Generate is a
       // pushdown barrier, so the <= maxDist predicate cannot be cloned
       // below the projection and re-run the O(|a|·|b|) distance (the
-      // ExtractMentions double-eval lesson)
+      // KgPipeline.mentionSets double-eval lesson)
       .select(explode(array(struct(col("a"), col("b"),
         levenshtein(col("a"), col("b")).cast("long").as("dist")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"), col("e.dist").as("dist"))

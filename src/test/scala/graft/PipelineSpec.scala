@@ -56,7 +56,7 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("occurrence counts saturate identically on string, compact and fused paths") {
+  test("occurrence counts saturate identically on string and fused paths") {
     // can't build a >2^31-occurrence doc; assert the clamp constant is the
     // packed-long bound and that normal counts are untouched
     assert(Mentions.MaxOccurrencesPerDoc == 0x7fffffffL)
@@ -65,17 +65,6 @@ class PipelineSpec extends AnyFunSuite {
       graft.model.Span("text", "scan scan scan join", null, 0)))).toDS()
     val n = Mentions.detectPerDoc(docs, bc).collect().map(m => m.curie -> m.n).toMap
     assert(n("op:scan") == 3 && n("op:join") == 1)
-  }
-
-  test("dictionary-coded (compact) pipeline == string pipeline, end to end") {
-    val docs = Corpus.synthesize(spark, 400, AnalyticsDomain.vocab).persist()
-    val pipe = graft.KgPipeline.analytics(spark)
-    val (ns, es, ts) = pipe.run(docs)
-    val (nsC, esC, tsC) = pipe.runCompact(docs)
-    assert(nsC.collect().toSet == ns.collect().toSet)
-    assert(esC.collect().toSet == es.collect().toSet)
-    assert(tsC.collect().toSet == ts.collect().toSet)
-    docs.unpersist()
   }
 
   test("fused mention-set pipeline == string pipeline, end to end") {
@@ -210,14 +199,18 @@ class PipelineSpec extends AnyFunSuite {
     for (dict <- dicts) {
       val bc = spark.sparkContext.broadcast(dict)
       val got = docs.toDF().select(col("doc_id"),
-          GraftColumnBridge.column(graft.functions.ExtractMentions(
-            GraftColumnBridge.expression(col("spans")), bc)).as("pm"))
+          GraftColumnBridge.column(graft.functions.ExtractMentionsKT(
+            GraftColumnBridge.expression(col("spans.kind")),
+            GraftColumnBridge.expression(col("spans.text")), bc)).as("pm"))
         .select(col("doc_id"), explode(col("pm")).as("p"))
         .select(col("doc_id"), shiftright(col("p"), 32).cast("int"),
           col("p").bitwiseAND(lit(0xffffffffL)))
-        .as[(String, Int, Long)].collect().toSet
-      val expected = Mentions.detectPerDocCompact(docs, bc).collect()
-        .map(m => (m.doc_id, m.rank, m.n)).toSet
+        .as[(String, Int, Long)].collect()
+        // a surface identifies its pattern, so it names the rank exactly
+        .map { case (d, rank, n) => (d, dict.byRank(rank).surface, n) }.toSet
+      val expected = Mentions.detectPerDoc(docs, bc).collect()
+        .map(m => (m.doc_id, m.surface, m.n)).toSet
+      assert(expected.nonEmpty)
       assert(got == expected, s"dict=${dict.linkFor.map(_.surface).mkString(",")}")
     }
   }
@@ -262,6 +255,19 @@ class PipelineSpec extends AnyFunSuite {
     docs.write.mode("overwrite").parquet(tmp)
     val back = spark.read.parquet(tmp)
     assert(Mentions.invariantViolations(docs.toDF(), back) == 0)
+  }
+
+  test("span signature digest is pinned (all four fields set, plus null fields)") {
+    import graft.model.{Doc, Span}
+    // md5 over the spans' (kind, text, media_ref, offset) renders, fields
+    // joined by SOH, spans by STX, a NUL byte standing in for each null field
+    val doc = Seq(Doc("d", Seq(
+      Span("text", "scan héllo join", "media://img/7", 0),
+      Span("image", null, "media://img/8", 1),
+      Span(null, "stray text", null, 2),
+      Span("text", null, null, 3)))).toDS()
+    val sig = doc.select(Mentions.spanSignature(col("spans"))).as[String].collect()
+    assert(sig.toSeq == Seq("f7a08c1f0a28c1bad955b7377772a881"))
   }
 
   test("mention detection links dictionary terms with provenance") {
@@ -355,7 +361,8 @@ class PipelineSpec extends AnyFunSuite {
     val bc = spark.sparkContext.broadcast(dict)
     val text = (0 until 1000).map(i => f"term$i%04d").mkString(" ")
     val docs = Seq(Doc("big", Seq(Span("text", text, null, 0)))).toDS()
-    val capped = Mentions.cooccurrencePairs(docs, bc)
+    val pipe = new KgPipeline(spark, AnalyticsDomain.context(), dict)
+    val capped = pipe.cooccurrencePairsFromSets(pipe.mentionSets(docs))
     assert(capped.count() == 256L * 255 / 2)
     // equal scores -> deterministic tie-break keeps the lexicographically
     // smallest curies (rank order)
@@ -365,20 +372,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(Mentions.cooccurrencePairsFromDocMentions(dm).count() == 256L * 255 / 2)
     // demo-sized docs are untouched by the cap
     val small = Seq(Doc("s", Seq(Span("text", "term0001 term0002 term0003", null, 0)))).toDS()
-    assert(Mentions.cooccurrencePairs(small, bc).count() == 3)
-    // the fused CoocPackedPairs expression applies the identical cap +
-    // tie-break: same pair count, same lexicographically-smallest survivors
-    import org.apache.spark.sql.GraftColumnBridge
-    val pmDf = docs.toDF().select(
-      GraftColumnBridge.column(graft.functions.ExtractMentions(
-        GraftColumnBridge.expression(col("spans")), bc)).as("pm"))
-    val fusedPairs = pmDf.select(explode(GraftColumnBridge.column(
-      graft.functions.CoocPackedPairs(GraftColumnBridge.expression(col("pm")),
-        bc, Mentions.DefaultMaxEntitiesPerDoc))).as("pair"))
-    assert(fusedPairs.count() == 256L * 255 / 2)
-    val maxSrcRank = fusedPairs.select(shiftright(col("pair"), 32).cast("int"))
-      .as[Int].collect().max
-    assert(dict.byRank(maxSrcRank).curie <= "e:0255")
+    assert(pipe.cooccurrencePairsFromSets(pipe.mentionSets(small)).count() == 3)
   }
 
   test("fused mention-set consumers tolerate arbitrary repartition (no contiguity contract)") {

@@ -85,25 +85,21 @@ object SpanPipelineProps extends Properties("SpanPipeline") {
 
   private lazy val spark = SparkTestBase.spark
 
-  property("string == compact == fused pipeline on arbitrary corpora") =
+  property("string == fused pipeline on arbitrary corpora") =
     forAll(PropGen.corpus) { docs =>
       import spark.implicits._
       val ds = spark.createDataset(docs)
       val pipe = KgPipeline.analytics(spark)
       val (ns, es, ts) = pipe.run(ds)
-      val (nsC, esC, tsC) = pipe.runCompact(ds)
       val (nsF, esF, tsF) = pipe.runFused(ds)
-      val ok = nsC.collect().toSet == ns.collect().toSet &&
-        esC.collect().toSet == es.collect().toSet &&
-        tsC.collect().toSet == ts.collect().toSet &&
-        nsF.collect().toSet == ns.collect().toSet &&
+      val ok = nsF.collect().toSet == ns.collect().toSet &&
         esF.collect().toSet == es.collect().toSet &&
         tsF.collect().toSet == ts.collect().toSet
-      spark.catalog.clearCache() // the three runs persist their working sets
+      spark.catalog.clearCache() // both runs persist their working sets
       ok
     }
 
-  property("detectPerDoc == detect aggregated; compact decodes to the same rows") =
+  property("detectPerDoc == detect aggregated") =
     forAll(PropGen.corpus) { docs =>
       import spark.implicits._
       val ds = spark.createDataset(docs)
@@ -112,10 +108,7 @@ object SpanPipelineProps extends Properties("SpanPipeline") {
         .groupBy(m => (m.doc_id, m.curie)).map { case (k, ms) => k -> ms.length.toLong }
       val perDoc = Mentions.detectPerDoc(ds, bc).collect()
         .map(m => (m.doc_id, m.curie) -> m.n).toMap
-      val dict = AnalyticsDomain.dict
-      val compact = Mentions.detectPerDocCompact(ds, bc).collect()
-        .map(m => (m.doc_id, dict.byRank(m.rank).curie) -> m.n).toMap
-      occ == perDoc && perDoc == compact
+      occ == perDoc
     }
 
   property("media spans pass through detect as provenance mentions, counts exact") =

@@ -7,8 +7,9 @@ import graft.corpus.{AnalyticsDomain, Corpus}
 /** Scaling probe (not part of the driver contract): per-stage wall times of
   * the BenchPipeline KG run at a given core count, fresh JVM per invocation.
   * args = (cores, nDocs). Prints one line per stage with the GC time that
-  * accrued during it (all collectors summed). Mirrors the compact
-  * (dictionary-coded) path that BenchPipeline.pipelineRun uses.
+  * accrued during it (all collectors summed). Times the stages of the fused
+  * mention-set path (`KgPipeline.runFused`) that BenchPipeline.pipelineRun
+  * uses.
   */
 object ScratchStages {
   def main(args: Array[String]): Unit = {
